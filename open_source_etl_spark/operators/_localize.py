@@ -19,11 +19,23 @@ import shutil
 from pyspark.sql import DataFrame
 
 
+def local_relation(df: DataFrame) -> DataFrame:
+    """Collect ``df`` into the driver JVM and return its rows as a
+    ``LocalRelation`` with the same schema (row order preserved).
+
+    The rows never cross into Python: ``spark.createDataFrame`` on a
+    Python list would serialize them back through a PythonRDD, which
+    starts a pyspark daemon and its workers just to replay a few rows."""
+    spark = df.sparkSession
+    jrows = df._jdf.collectAsList()
+    jdf = spark._jsparkSession.createDataFrame(jrows, df._jdf.schema())
+    return DataFrame(jdf, spark)
+
+
 def localize(df: DataFrame, *workdirs: str) -> DataFrame:
     """Collect ``df``, remove every workdir, and return the rows as a
     local DataFrame with the same schema (row order preserved)."""
-    spark = df.sparkSession
-    rows = df.collect()
+    out = local_relation(df)
     for wd in workdirs:
         shutil.rmtree(wd, ignore_errors=True)
-    return spark.createDataFrame(rows, df.schema)
+    return out

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, load_table_compute
+from ..functions.kgrams import word_kgrams
 from ..registry import query
 
 # LCG-style deterministic bucket in [0, 100): identical integer math on
@@ -334,21 +335,11 @@ def datapipe_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     will broadcast it from its actual runtime size, but this simulation
     carves the benchmark out of the corpus itself (doc_id % 7), so its
     gram set scales with the data and a hint would pin an unbounded
-    broadcast at 100 TB.  The token array materializes as a column
-    BEFORE the transform() lambda (transform bodies are not CSE'd — see
-    llm_text.text_fingerprint)."""
+    broadcast at 100 TB."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("w")
-    ).filter(F.size("w") >= 5)
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("w") - 4),
-                lambda i: F.concat_ws(" ", F.slice("w", i, 5)),
-            )
-        ).alias("g"),
     )
+    grams = word_kgrams(docs, "w", 5)
     bench = (
         grams.filter(F.col("doc_id") % 7 == 0).select("g").distinct()
     )
@@ -1261,9 +1252,11 @@ def datapipe_boilerplate_prune(
                     for doc_id, text, n in zip(
                         pdf["doc_id"], pdf["text"], pdf["n_chars"]
                     ):
-                        n = int(n)
-                        if n < 20:
+                        # null text or n_chars yields no shingle, as in
+                        # the string form (n_chars >= 20 is not true)
+                        if text is None or pd.isna(n) or n < 20:
                             continue
+                        n = int(n)
                         if len(text) != n or not text.isascii():
                             # generic fallback: same polynomial over
                             # each CHAR window's UTF-8 bytes (identical
@@ -1428,25 +1421,9 @@ def datapipe_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune to float-addition ordering (a double sum differed at the
     4th decimal between engines on the fixtures)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    toks = docs.select(
-        "doc_id", "lang", F.split("text", " ").alias("w")
-    ).withColumn("nw", F.size("w"))
-    terms = toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.concat(
-                F.col("w"),
-                F.when(
-                    F.col("nw") >= 2,
-                    F.expr(
-                        "transform(sequence(1, nw - 1), "
-                        "i -> concat(element_at(w, i), ' ', "
-                        "element_at(w, i + 1)))"
-                    ),
-                ).otherwise(F.array().cast("array<string>")),
-            )
-        ).alias("term"),
+    toks = docs.select("doc_id", "lang", F.split("text", " ").alias("w"))
+    terms = toks.select("doc_id", "lang", F.explode("w").alias("term")).unionByName(
+        word_kgrams(toks, "w", 2, alias="term")
     )
     feats = terms.select(
         "doc_id",

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_compute
+from ..functions.kgrams import word_windows
 from ..registry import query
 
 
@@ -183,10 +184,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same two cost bounds as the unigram variant: the (lang, source)
     block caps the quadratic term (MinHash bands are the unbounded-block
     path), and the t=1/4 set-similarity length filter (4·min ≥ max, exact
-    integer arithmetic) prunes on two ints before any intersection.  At
-    scale the string shingles hash to int64 (xxhash64) before the
-    intersection — kept as strings here so the DuckDB oracle shares the
-    exact set definition.
+    integer arithmetic) prunes on two ints before any intersection.
+    Each shingle is its word-triple window (``word_windows``, no
+    lambda, codegen'd) cast to a string key, ``{w1, w2, w3}``: split
+    words hold no space, so ``", "`` only ever separates fields, the key
+    names its triple exactly, and every set size — all Jaccard reads —
+    equals the oracle's over joined strings.  The cast matters: string
+    arrays dedup and intersect through a hash set, struct arrays by
+    pairwise comparison (14x the CPU at sf0.1).  At scale the shingles
+    hash to int64 (xxhash64) before the intersection.
     """
     docs = load_table_compute(spark, sf_dir, "documents")
     w = docs.select(
@@ -196,12 +202,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(0, size(w)-3),"
-                " i -> concat_ws(' ', slice(w, i+1, 3)))"
-            )
-        ).alias("sh"),
+        F.array_distinct(word_windows("w", 3).cast("array<string>")).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))

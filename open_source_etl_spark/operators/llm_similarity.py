@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_compute
 from ..registry import query
+from ._localize import local_relation
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -609,23 +610,16 @@ def _pq_topk(
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.size("embedding") == 64
     )
-    # one materialization of the subvector explode: it feeds the seed
-    # means, BOTH Lloyd rounds, and the final code assignment — without
-    # it each consumer re-runs the scan + explode (4 full passes).  The
-    # exploded form carries the same bytes as the input vectors (m
-    # sub_d-dim slices of each 64-dim embedding), so the cache is
-    # corpus-sized, not corpus-multiplied; at 100 TB the codebook
-    # trains on a sample offline (docstring) and only the single
-    # code-assignment pass touches the full corpus.
-    # persist + the count below (r15, VERDICT r14 item 2): the eager
-    # localCheckpoint was a BLOCKING job on top of the count's job —
-    # persist materializes lazily inside the count the candidate
-    # budget needs anyway (one job, not two), and keeps lineage for
-    # executor-loss recovery (the ADVICE r14 cluster-safety note).
-    # Alternating in-session A/B/C at sf0.1 (4 rounds each):
-    # lazy 4-pass min 3.63 / persist min 3.08 / eager-ckpt min 2.96,
-    # means 4.9 / 3.9 / 4.7 — persist wins the mean and ties the min
-    # while doing strictly less work (no second blocking job).
+    # one materialization of the subvector explode: it feeds the
+    # corpus count, the seed means and BOTH Lloyd rounds — without it
+    # each consumer re-runs the scan + explode.  The exploded form
+    # carries the same bytes as the input vectors (m sub_d-dim slices
+    # of each 64-dim embedding), so the cache is corpus-sized, not
+    # corpus-multiplied; at 100 TB the codebook trains on a sample
+    # offline (docstring) and only the single code-assignment pass
+    # touches the full corpus.  persist (not an eager localCheckpoint)
+    # materializes inside the count the candidate budget needs anyway
+    # — one job, not two — and keeps lineage for executor-loss recovery.
     from pyspark import StorageLevel
 
     subrows = _pq_subrows(emb, m, sub_d).persist(
@@ -649,12 +643,19 @@ def _pq_topk(
     # codebook is what both downstream consumers (code assignment and
     # the ADC table) reuse, and the full chain from the materialized
     # subrows is 3 mean-shuffles + 2 broadcast assigns computed once.
+    # The m*ksub codewords are collected into a driver-side local
+    # relation, so the codebook holds no persisted RDD, and the Lloyd
+    # rounds are the last pass over the cached subrows: the final code
+    # assignment below runs in the caller's action, re-deriving its
+    # subrows with one narrow scan + explode, so the cache is released
+    # before the frame is returned.
     codebook = _pq_centroid_means(
         subrows.withColumn("cell", F.col("vec_id") % ksub)
     )
     for _ in range(2):
         codebook = _pq_centroid_means(_pq_assign(subrows, codebook))
-    codebook = codebook.localCheckpoint(eager=True)
+    codebook = local_relation(codebook)
+    subrows.unpersist()
     codes = _pq_assign(subrows, codebook).select("vec_id", "sub", "cell")
     # ADC table: the query's per-subspace dot with every codeword
     qsub = _pq_subrows(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_compute
+from ..functions.kgrams import word_kgrams
 from ..registry import query
 
 # deliberately tiny, deterministic stopword list shared with the oracles
@@ -575,22 +576,17 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity rules: all per-doc metrics stay INTEGER (gram counts) and the
     thresholds are integer cross-multiplies; the only division is one
     bigint ratio per source, so no float accumulation order can diverge
-    between engines.  Scale: one shuffle on (doc_id, gram) with map-side
-    partial agg, then doc-sized and source-sized reductions — the gram
-    explosion is never re-shuffled."""
-    docs = load_table(spark, sf_dir, "documents")
-    # materialize the split ONCE (transform-lambda expressions are not
-    # CSE'd — see text_fingerprint); guard size>=2 so sequence() is valid
-    w = docs.select(
+    between engines.  Scale: the documents shuffle once, hashed on
+    doc_id, and every bigram of a document is then counted inside the
+    partition that holds it — the (doc, gram) and per-doc aggregates
+    both read that partitioning, so the gram explosion is never
+    shuffled; only the source-sized reduction moves rows again.  The
+    hash repartition also fans a single-split scan out across cores."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    w = docs.repartition("doc_id").select(
         "doc_id", "source", F.split(F.lower("text"), " ").alias("w")
-    ).filter(F.size("w") >= 2)
-    grams = w.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr("transform(sequence(0, size(w)-2), i -> concat(w[i], ' ', w[i+1]))")
-        ).alias("g"),
     )
+    grams = word_kgrams(w, "w", 2)
     per_gram = grams.groupBy("doc_id", "source", "g").agg(F.count("*").alias("c"))
     per_doc = per_gram.groupBy("doc_id", "source").agg(
         F.sum("c").alias("n"), F.count("*").alias("d"), F.max("c").alias("m")
@@ -662,19 +658,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cross-multiply 2*stale > total, so the single double division
     per source is the only float op."""
     docs = load_table_compute(spark, sf_dir, "documents")
-    w = docs.select(
-        "doc_id", "source", F.split(F.lower("text"), " ").alias("w")
-    ).filter(F.size("w") >= 3)
-    grams = w.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(w)-3),"
-                " i -> concat_ws(' ', slice(w, i+1, 3)))"
-            )
-        ).alias("g"),
-    ).distinct()
+    w = docs.select("doc_id", "source", F.split(F.lower("text"), " ").alias("w"))
+    grams = word_kgrams(w, "w", 3).distinct()
     first_doc = F.min("doc_id").over(Window.partitionBy("g"))
     per_doc = (
         grams.withColumn("first_doc", first_doc)
@@ -754,19 +739,8 @@ def text_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, the flag threshold is an integer cross-multiply, and the
     one double division per source cannot drift."""
     docs = load_table_compute(spark, sf_dir, "documents")
-    w = docs.select(
-        "doc_id", "source", F.split(F.lower("text"), " ").alias("w")
-    ).filter(F.size("w") >= 2)
-    grams = w.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(w)-2),"
-                " i -> concat(w[i], ' ', w[i+1]))"
-            )
-        ).alias("g"),
-    )
+    w = docs.select("doc_id", "source", F.split(F.lower("text"), " ").alias("w"))
+    grams = word_kgrams(w, "w", 2)
     bi = grams.groupBy("g").agg(F.count("*").alias("cg"))
     w1 = F.split_part(F.col("g"), F.lit(" "), F.lit(1))
     uni = bi.groupBy(w1.alias("w1")).agg(F.sum("cg").alias("cw"))

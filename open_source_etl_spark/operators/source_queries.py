@@ -20,7 +20,7 @@ from ..catalog import load_table
 from ..registry import query
 from ..functions.zorder import morton_code, morton_sql
 from ..sources import read_jsonl, read_orc, write_jsonl, write_orc
-from ._localize import localize
+from ._localize import local_relation, localize
 
 
 @query(
@@ -270,12 +270,12 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the bucketed join under the no-broadcast conf; the
         # returned frame is the (tiny) aggregated result
-        rows = out.collect()
+        res = local_relation(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {t_li}")
         spark.sql(f"DROP TABLE IF EXISTS {t_ord}")
-    return spark.createDataFrame(rows, out.schema).orderBy("o_orderstatus")
+    return res.orderBy("o_orderstatus")
 
 
 @query(

@@ -164,26 +164,46 @@ def udf_sql_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_scripting_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 SQL SCRIPTING (BEGIN/DECLARE/WHILE, SQL/PSM-style):
-    iteratively double a price threshold until fewer than 100 orders
-    exceed it, entirely inside one SQL script — the procedural control
-    flow warehouses run as stored procedures, executed by the engine
-    with each iteration's probe still a full declarative (optimizable,
-    distributed) query.  The driver holds two scalar variables; the
-    data never leaves the cluster.  The oracle replays the same
-    doubling recurrence as a recursive CTE."""
+    double a price threshold until fewer than 100 orders exceed it,
+    inside one SQL script — the procedural control flow warehouses run
+    as stored procedures.  The oracle replays the doubling recurrence as
+    a recursive CTE that re-counts ``orders`` every round.
+
+    The script reads ``orders`` once instead: at least 100 prices exceed
+    T exactly when there are at least 100 non-null prices and the
+    100th-largest is above T (ties included — the top 100 are then all
+    above T, and if any 100 are above T so are the 100 largest).  One
+    top-100 probe fetches that count and price into two scalar
+    variables, the WHILE loop doubles the threshold against them on the
+    driver, and one count above the final threshold gives ``n_above``.
+
+    Eager work at build: a script runs every statement when
+    ``spark.sql`` is called and returns its last result as a local
+    relation, so all its jobs fire before the DataFrame is returned and
+    the action fires none.  They are: the top-100 probe (one job, one
+    scan of ``orders``); one single-task job per WHILE condition check
+    and per ``SET threshold`` (the scripting engine evaluates each as a
+    query over a one-row relation; 19 for the nine doublings the sf0.01
+    and sf0.1 fixtures take); and the final count (two jobs, the second
+    scan of ``orders``)."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
     view = scoped_view(spark, sf_dir, "orders", "sqlscript_orders")
     return spark.sql(
         f"""
         BEGIN
           DECLARE threshold BIGINT DEFAULT 1000;
-          DECLARE n BIGINT DEFAULT 0;
-          SET n = (SELECT COUNT(*) FROM {view} WHERE o_totalprice > threshold);
-          WHILE n >= 100 DO
+          DECLARE n_top BIGINT;
+          DECLARE p100 DOUBLE;
+          SET (n_top, p100) = (
+            SELECT COUNT(*), MIN(o_totalprice)
+            FROM (SELECT o_totalprice FROM {view}
+                  WHERE o_totalprice IS NOT NULL
+                  ORDER BY o_totalprice DESC LIMIT 100));
+          WHILE n_top >= 100 AND p100 > threshold DO
             SET threshold = threshold * 2;
-            SET n = (SELECT COUNT(*) FROM {view} WHERE o_totalprice > threshold);
           END WHILE;
-          SELECT threshold, n AS n_above;
+          SELECT threshold, COUNT(*) AS n_above
+          FROM {view} WHERE o_totalprice > threshold;
         END
         """
     )

@@ -57,6 +57,17 @@ def test_pq_query_reports_floor_met(spark, queries):
     assert len(rows) == 1 and rows[0].recall_floor_met is True
 
 
+def test_pq_search_releases_persisted_rdds(spark, queries):
+    """The subvector cache and the codebook are released by the query
+    itself: no persisted RDD outlives the build or the action."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    df = queries["ann_pq_search"](spark, SF)
+    assert persisted().size() == before
+    assert df.collect()[0].recall_floor_met is True
+    assert persisted().size() == before
+
+
 def test_pq_codes_compress(spark, queries):
     """The code table really is m codes per vector over a ksub-sized
     codebook: every (sub, cell) lies in range and each vector carries

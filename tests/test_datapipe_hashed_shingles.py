@@ -52,3 +52,38 @@ def test_hashed_shingle_plan_carries_no_strings(spark):
     df2 = datapipe_contamination_ngram(spark, SF, hash_shingles=True)
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "xxhash64" in plan2
+
+
+def test_boilerplate_prune_hashed_matches_string_on_edge_rows(spark, tmp_path):
+    """The Arrow kernel accepts what the string form accepts: null text
+    or null ``n_chars`` yields no shingle, empty and short texts keep
+    trivially, and non-ASCII texts (the per-char UTF-8 fallback) count
+    the same shingles as ``substring``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    header = "shared boilerplate header, "
+    texts = [header + f"ascii body number {i}" for i in range(4)]
+    texts += [header + "ñandú café 日本語テキスト", header + "emoji 🚀 and ünïcödé ✓"]
+    texts += ["ñandú café 日本語テキスト and ünïcödé", None, "", "tiny", "has text, null n_chars"]
+    n_chars = [None if t is None else len(t) for t in texts]
+    n_chars[-1] = None
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "n_chars": pa.array(n_chars, pa.int64()),
+            }
+        ),
+        sf / "documents.parquet",
+    )
+    string = _rows(datapipe_boilerplate_prune(spark, str(sf), hash_shingles=False))
+    hashed = _rows(datapipe_boilerplate_prune(spark, str(sf), hash_shingles=True))
+    assert hashed == string
+    by_id = {r[0]: r for r in string}
+    assert by_id[4][2] > 0 and by_id[5][2] > 0  # non-ASCII docs share the header
+    for doc in (7, 8, 9, 10):  # null, empty, short, null n_chars
+        assert by_id[doc][1:] == (0, 0, True)
