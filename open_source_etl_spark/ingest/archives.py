@@ -29,13 +29,10 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..functions.per_doc import synth_parse
 
 
 def archive_n_members(doc_id: int) -> int:
@@ -583,31 +580,14 @@ ARCHIVE_SCHEMA = (
 )
 
 
-def _extract_df(docs_df: DataFrame, make, parse) -> DataFrame:
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_members", "sum_content_chars", "total_size")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make(int(doc_id), str(t))
-                vals = (int(doc_id), *parse(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(kernel, ARCHIVE_SCHEMA)
-
-
 def extract_zip_members(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-extract ZIP per document row."""
-    return _extract_df(docs_df, make_zip_bytes, parse_zip)
+    return synth_parse(docs_df, make_zip_bytes, parse_zip, ARCHIVE_SCHEMA)
 
 
 def extract_tar_members(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-extract TAR per document row."""
-    return _extract_df(docs_df, make_tar_bytes, parse_tar)
+    return synth_parse(docs_df, make_tar_bytes, parse_tar, ARCHIVE_SCHEMA)
 
 
 # --- multi-member gzip JSONL (the .jsonl.gz corpus shape) -------------------
@@ -754,20 +734,4 @@ def parse_gzip_jsonl(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
 
 def extract_gzip_jsonl(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-extract one multi-member .jsonl.gz per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_members", "n_lines", "sum_ids", "sum_text_chars")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_gzip_jsonl_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_gzip_jsonl(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, GZIP_JSONL_SCHEMA
-    )
+    return synth_parse(docs_df, make_gzip_jsonl_bytes, parse_gzip_jsonl, GZIP_JSONL_SCHEMA)

@@ -32,13 +32,10 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..functions.per_doc import synth_parse
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -385,23 +382,7 @@ AVRO_EXTRACT_SCHEMA = (
 
 def extract_avro(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-extract one Avro container per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = tuple(f.split()[0] for f in AVRO_EXTRACT_SCHEMA.split(", "))
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_avro_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_avro(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, AVRO_EXTRACT_SCHEMA
-    )
+    return synth_parse(docs_df, make_avro_bytes, parse_avro, AVRO_EXTRACT_SCHEMA)
 
 
 # --- schema resolution (Avro 1.11 spec, "Schema Resolution") ----------------
@@ -685,20 +666,4 @@ AVRO_EVOLVED_SCHEMA = (
 def extract_avro_evolved(docs_df: DataFrame) -> DataFrame:
     """Synthesize a V1-written container per doc row and read it
     through the V2 reader schema."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = tuple(f.split()[0] for f in AVRO_EVOLVED_SCHEMA.split(", "))
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_avro_v1_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_avro_evolved(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, AVRO_EVOLVED_SCHEMA
-    )
+    return synth_parse(docs_df, make_avro_v1_bytes, parse_avro_evolved, AVRO_EVOLVED_SCHEMA)

@@ -23,9 +23,10 @@ extractors (SCALE.md §9f/§9h).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..functions.per_doc import per_doc
 
 # XXH32 primes (the published xxHash32 constants)
 _P1 = 2654435761
@@ -460,21 +461,8 @@ LZ4_SCHEMA = (
 
 def extract_lz4(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-walk one concatenated .lz4 file per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_skippable", "n_blocks",
-            "content_bytes", "content_sum", "n_checksums",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                raw = make_lz4_bytes(int(doc_id))
-                vals = (int(doc_id), *parse_lz4(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id").mapInPandas(kernel, LZ4_SCHEMA)
+    return per_doc(
+        docs_df.select("doc_id"),
+        lambda d: [parse_lz4(d, make_lz4_bytes(d))],
+        LZ4_SCHEMA,
+    )

@@ -23,13 +23,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..functions.per_doc import synth_parse
 
 
 def pdf_n_pages(doc_id: int) -> int:
@@ -290,24 +287,7 @@ PDF_SCHEMA = (
 def extract_pdf_text(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-extract a PDF per document row (same harness
     shape as ``ingest/archives.py``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_objects", "n_pages", "n_streams", "n_flate",
-            "text_chars",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_pdf_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_pdf(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(kernel, PDF_SCHEMA)
+    return synth_parse(docs_df, make_pdf_bytes, parse_pdf, PDF_SCHEMA)
 
 
 # --- Subtitles (SRT / WebVTT) ------------------------------------------
@@ -444,23 +424,4 @@ SUBTITLE_SCHEMA = (
 
 def extract_subtitles(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-parse an SRT/WebVTT file per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "is_vtt", "n_cues", "total_duration_ms",
-            "text_chars", "n_lines",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_subtitle_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_subtitles(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, SUBTITLE_SCHEMA
-    )
+    return synth_parse(docs_df, make_subtitle_bytes, parse_subtitles, SUBTITLE_SCHEMA)

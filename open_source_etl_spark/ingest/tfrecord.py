@@ -22,12 +22,10 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..functions.per_doc import synth_parse
 
 
 def _crc32c_table() -> tuple:
@@ -233,20 +231,4 @@ TFRECORD_SCHEMA = (
 
 def extract_tfrecord(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-scan a TFRecord file per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_records", "sum_text_chars", "sum_ids")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_tfrecord_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_tfrecord(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, TFRECORD_SCHEMA
-    )
+    return synth_parse(docs_df, make_tfrecord_bytes, parse_tfrecord, TFRECORD_SCHEMA)

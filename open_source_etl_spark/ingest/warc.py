@@ -21,13 +21,7 @@ shards.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..functions.per_doc import Decoder
 
 
 def warc_page_params(doc_id: int, k: int, n_chars: int) -> tuple[int, int, int]:
@@ -284,45 +278,9 @@ WARC_EXTRACT_SCHEMA = (
 )
 
 
-def synthesize_warc(docs_df: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, payload) rows carrying a WARC file."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        make_warc_bytes(int(d), str(t))
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, "doc_id long, payload binary"
-    )
-
-
-def extract_warc_records(warc_df: DataFrame) -> DataFrame:
+def walk_warc(doc_id: int, raw: bytes) -> list[tuple]:
     """Per-WARC-file record structure + visible-text extraction."""
+    return [parse_warc(doc_id, raw)[:4]]
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
 
-        cols = (
-            "doc_id", "n_records", "n_responses", "n_ok", "sum_text_chars",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_warc(int(doc_id), bytes(b))[:4])
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return warc_df.select("doc_id", "payload").mapInPandas(
-        kernel, WARC_EXTRACT_SCHEMA
-    )
+extract_warc_records = Decoder(walk_warc, WARC_EXTRACT_SCHEMA)

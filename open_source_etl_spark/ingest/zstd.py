@@ -26,9 +26,10 @@ extractors (SCALE.md §9f/§9h).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..functions.per_doc import per_doc
 
 # XXH64 (the xxHash64 primes from the reference specification)
 _P1 = 0x9E3779B185EBCA87
@@ -1558,52 +1559,24 @@ ZSTD_DICT_SCHEMA = (
 )
 
 
+def _walk_zstd_dicts(doc_id: int) -> list[tuple]:
+    raw, dicts = make_zstd_dict_frames(doc_id)
+    used: list[int] = []
+    nf, _ns, nb, cb, cs, nck = parse_zstd(
+        doc_id, raw, dicts=dicts, used_dids=used
+    )
+    return [(nf, nb, cb, cs, sum(used), nck)]
+
+
 def extract_zstd_dicts(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-walk two dictionary-keyed frames per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_blocks", "content_bytes",
-            "content_sum", "dict_ids_sum", "n_checksums",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw, dicts = make_zstd_dict_frames(d)
-                used: list[int] = []
-                nf, _ns, nb, cb, cs, nck = parse_zstd(
-                    d, raw, dicts=dicts, used_dids=used
-                )
-                vals = (d, nf, nb, cb, cs, sum(used), nck)
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, ZSTD_DICT_SCHEMA
-    )
+    return per_doc(docs_df.select("doc_id"), _walk_zstd_dicts, ZSTD_DICT_SCHEMA)
 
 
 def extract_zstd(docs_df: DataFrame) -> DataFrame:
     """Synthesize-and-walk one concatenated .zst file per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_skippable", "n_blocks",
-            "content_bytes", "content_sum", "n_checksums",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                raw = make_zstd_bytes(int(doc_id))
-                vals = (int(doc_id), *parse_zstd(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id").mapInPandas(kernel, ZSTD_SCHEMA)
+    return per_doc(
+        docs_df.select("doc_id"),
+        lambda d: [parse_zstd(d, make_zstd_bytes(d))],
+        ZSTD_SCHEMA,
+    )

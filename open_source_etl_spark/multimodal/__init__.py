@@ -2,24 +2,24 @@
 binary columns with typed metadata, processed by Arrow-batched
 ``mapInPandas`` pipelines.
 
-Uncompressed formats decode FOR REAL with the stdlib: RIFF/WAVE via the
-``wave`` module and 24-bit BMP via hand struct parsing (``synth.py``
-generates spec-compliant fixtures; ``decode_wav_real``/``decode_bmp_real``
-parse them back, differentially checked against formula oracles).  The
-container has no compressed-codec libraries, but the compressed codec
-families are decoded in pure stdlib anyway — PNG (DEFLATE + scanline
+Every media family is a table entry: ``make_*_bytes(doc_id)`` in
+``synth.py`` builds a spec-compliant payload, and a ``Decoder`` in
+``decode.py`` (MP3: ``dec_mp3.py``) pairs the module-level walker
+``walk_*(doc_id, raw) -> rows`` with its output schema.  One adapter,
+``functions.per_doc``, hosts every walker: ``decoder(media_df)``
+decodes a ``doc_id, payload`` frame, and ``synth_decode(docs, make,
+decoder)`` builds and decodes each payload inside one Python stage.
+
+The container has no codec libraries, but the codec families are
+decoded in pure stdlib anyway — WAV, BMP, PNG (DEFLATE + scanline
 unfilters, all color types, Adam7), JPEG (baseline through progressive
 with restart intervals), GIF (variable-width LZW), FLAC, WebP VP8L,
 TIFF, MP3 (every B.7 Huffman table incl. linbits escapes, requant,
-stereo, exact filterbank — ``dec_mp3.py``) and H.264 CAVLC intra +
-integer-pel inter (multi-ref, B/weighted/direct) — with the remaining
-depth (CABAC, fractional-pel motion, and kin) behind declared
-``NotImplementedError`` boundaries that name their spec clause and
-carry rejection tests — while everything Spark-side is real and tested: the struct
-schemas, the binary payload plumbing, the mapInPandas batch iteration,
-row expansion (frame sampling), and the partitioning posture (media rows
-are large → size partitions by bytes, never collect payloads to the
-driver).
+stereo, exact filterbank) and H.264 CAVLC pictures — with the
+remaining depth (CABAC and kin) behind declared ``NotImplementedError``
+boundaries that name their spec clause and carry rejection tests.  Media rows are large, so
+partitions are sized by bytes and payloads are never collected to the
+driver.
 """
 
 from .schema import (
@@ -28,14 +28,13 @@ from .schema import (
     with_media_payload,
 )
 
-# decode re-exports are LAZY (PEP 562): a Spark worker importing a
-# split-out family module (dec_mp3, ...) must not execute decode.py
-# as a side effect of this package's __init__.
+# decode re-exports are LAZY (PEP 562): a Spark worker importing
+# dec_mp3 must not execute decode.py as a side effect of this
+# package's __init__.
 _DECODE_NAMES = frozenset({
-    "audio_chunk_energy", "decode_bmp_real", "decode_wav_real",
-    "synthesize_bmp", "synthesize_wav", "wav_window_features",
-    "block_mean_resize", "byte_histogram", "perceptual_hash",
-    "decode_image_meta", "sample_frames",
+    "audio_chunk_energy", "block_mean_resize", "byte_histogram",
+    "decode_bmp_real", "decode_image_meta", "decode_wav_real",
+    "perceptual_hash", "sample_frames", "wav_window_features",
 })
 
 
@@ -61,8 +60,6 @@ __all__ = [
     "decode_image_meta",
     "decode_wav_real",
     "decode_bmp_real",
-    "synthesize_wav",
-    "synthesize_bmp",
     "wav_window_features",
     "sample_frames",
 ]

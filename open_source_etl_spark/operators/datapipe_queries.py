@@ -1548,10 +1548,12 @@ def datapipe_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-file work in an Arrow ``mapInPandas`` kernel with no cross-row
     state — at 100 TB the same kernel maps over ``binaryFile`` rows of
     real crawl shards (``ingest/warc.py``)."""
-    from ..ingest.warc import extract_warc_records, synthesize_warc
+    from ..functions.per_doc import synthesize
+    from ..ingest.warc import extract_warc_records, make_warc_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_warc_records(synthesize_warc(docs)).orderBy("doc_id")
+    payloads = synthesize(docs, make_warc_bytes, "text")
+    return extract_warc_records(payloads).orderBy("doc_id")
 
 
 @query(

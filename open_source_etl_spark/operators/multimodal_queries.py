@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_compute
-from ..multimodal.decode import fuse_synth_decode
+from ..functions.per_doc import synth_decode
 from ..multimodal import decode_image_meta, perceptual_hash, sample_frames, with_media_payload
 from ..registry import query
 
@@ -52,7 +52,7 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec site raises ``NotImplementedError`` (no image libs here)."""
     docs = load_table_compute(spark, sf_dir, "documents", heavy=False)
     media = with_media_payload(docs)
-    return decode_image_meta(media, codec="fake").orderBy("doc_id")
+    return decode_image_meta(media).orderBy("doc_id")
 
 
 @query(
@@ -260,7 +260,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
-    hashes = perceptual_hash(with_media_payload(docs), codec="fake")
+    hashes = perceptual_hash(with_media_payload(docs))
     a = hashes.select(F.col("doc_id").alias("doc_a"), "phash")
     b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"))
     return (
@@ -295,14 +295,15 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode: spec-compliant RIFF/WAVE payloads (written by
     the stdlib ``wave`` module) parsed back by a mapInPandas kernel —
     chunk walk for framerate/channels/width/frames plus exact integer
-    peak and RMS from the PCM samples.  Two chained Python stages
-    (synthesize standing in for binaryFile ingest, then decode), zero
+    peak and RMS from the PCM samples.  One Python stage builds
+    (standing in for binaryFile ingest) and decodes each payload, zero
     shuffle; compressed audio (MP3/AAC) stays behind the declared
     ``NotImplementedError`` sites in ``multimodal/decode.py``."""
-    from ..multimodal.decode import decode_wav_real, synthesize_wav
+    from ..multimodal.decode import decode_wav_real
+    from ..multimodal.synth import make_wav_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav, decode_wav_real).orderBy("doc_id")
+    return synth_decode(docs, make_wav_bytes, decode_wav_real).orderBy("doc_id")
 
 
 @query(
@@ -331,10 +332,11 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bottom-up padded pixel array.  The oracle predicts every
     value from the generation formulas; Spark earns them by parsing the
     actual bytes.  JPEG/PNG remain behind ``NotImplementedError``."""
-    from ..multimodal.decode import decode_bmp_real, synthesize_bmp
+    from ..multimodal.decode import decode_bmp_real
+    from ..multimodal.synth import make_bmp_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents", heavy=False)
-    return fuse_synth_decode(docs, synthesize_bmp, decode_bmp_real).orderBy("doc_id")
+    return synth_decode(docs, make_bmp_bytes, decode_bmp_real).orderBy("doc_id")
 
 
 @query(
@@ -365,10 +367,11 @@ def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM with per-window RMS and zero-crossing counts — the row-expanding
     (1 → n_windows) feature kernel real DSP pipelines use, running on
     genuine RIFF/WAVE bytes end to end."""
-    from ..multimodal.decode import synthesize_wav, wav_window_features
+    from ..multimodal.decode import wav_window_features
+    from ..multimodal.synth import make_wav_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav, wav_window_features).orderBy(
+    return synth_decode(docs, make_wav_bytes, wav_window_features).orderBy(
         "doc_id", "window_idx"
     )
 
@@ -401,10 +404,11 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sites.  The oracle predicts geometry and exact channel means from the
     generation formulas; Spark earns them by reconstructing actual
     pixels (a wrong unfilter implementation shifts every mean)."""
-    from ..multimodal.decode import decode_png_real, synthesize_png
+    from ..multimodal.decode import decode_png_real
+    from ..multimodal.synth import make_png_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png, decode_png_real).orderBy("doc_id")
+    return synth_decode(docs, make_png_bytes, decode_png_real).orderBy("doc_id")
 
 
 @query(
@@ -437,10 +441,11 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact pixel mean from the generation formulas; Spark earns
     them by decoding the bitstream (a wrong Huffman table, extend sign,
     or IDCT scale shifts every mean).  MP3 remains a declared stub."""
-    from ..multimodal.decode import decode_jpeg_real, synthesize_jpeg
+    from ..multimodal.decode import decode_jpeg_real
+    from ..multimodal.synth import make_jpeg_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg, decode_jpeg_real).orderBy("doc_id")
+    return synth_decode(docs, make_jpeg_bytes, decode_jpeg_real).orderBy("doc_id")
 
 
 @query(
@@ -486,10 +491,11 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     third compressed codec family (LZW) retired from the declared-stub
     list, beside DEFLATE (PNG) and Huffman+DCT (JPEG).  Only MP3/H.264
     remain stubs (no codec libs in this container)."""
-    from ..multimodal.decode import decode_gif_real, synthesize_gif
+    from ..multimodal.decode import decode_gif_real
+    from ..multimodal.synth import make_gif_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif, decode_gif_real).orderBy("doc_id")
+    return synth_decode(docs, make_gif_bytes, decode_gif_real).orderBy("doc_id")
 
 
 @query(
@@ -528,10 +534,11 @@ def multimodal_avi_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_frames rows) frame-extraction shape on genuine container bytes;
     turns the declared-stub video area into a value-checked query
     without new codec work (H.264 stays a declared stub)."""
-    from ..multimodal.decode import decode_avi_mjpeg, synthesize_avi
+    from ..multimodal.decode import decode_avi_mjpeg
+    from ..multimodal.synth import make_avi_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_avi, decode_avi_mjpeg).orderBy("doc_id", "frame_idx")
+    return synth_decode(docs, make_avi_bytes, decode_avi_mjpeg).orderBy("doc_id", "frame_idx")
 
 
 @query(
@@ -587,10 +594,11 @@ def multimodal_avi_av_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     query for the round-7 multi-stream strf fix (a demuxer that
     validates the audio stream's WAVEFORMATEX against the video codec
     rejects these valid files)."""
-    from ..multimodal.decode import decode_avi_av, synthesize_avi_av
+    from ..multimodal.decode import decode_avi_av
+    from ..multimodal.synth import make_avi_av_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_avi_av, decode_avi_av).orderBy("doc_id")
+    return synth_decode(docs, make_avi_av_bytes, decode_avi_av).orderBy("doc_id")
 
 
 @query(
@@ -662,10 +670,11 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     CBR/VBR, padded/protected-frame counts, reservoir depth,
     Huffman-region geometry) an audio data pipeline runs per file
     without decoding audio."""
-    from ..multimodal.decode import decode_mp3_frames, synthesize_mp3
+    from ..multimodal.decode import decode_mp3_frames
+    from ..multimodal.synth import make_mp3_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3, decode_mp3_frames).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_bytes, decode_mp3_frames).orderBy("doc_id")
 
 
 @query(
@@ -745,10 +754,11 @@ def multimodal_h264_nal_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     without pixel decode; CAVLC/CABAC macroblock reconstruction remains
     the declared stub.  Byte-exact RBSP size recovery proves the EPB
     stripping is real, not a start-code count."""
-    from ..multimodal.decode import decode_h264_nals, synthesize_h264
+    from ..multimodal.decode import decode_h264_nals
+    from ..multimodal.synth import make_h264_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264, decode_h264_nals).orderBy("doc_id")
+    return synth_decode(docs, make_h264_bytes, decode_h264_nals).orderBy("doc_id")
 
 
 @query(
@@ -796,10 +806,11 @@ def multimodal_h264_ipcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked — the byte-stream-to-pixels proof for the video
     column, complementing ``multimodal_avi_mjpeg_decode`` (MJPEG) and
     the header-level ``multimodal_h264_nal_walk``."""
-    from ..multimodal.decode import decode_h264_ipcm, synthesize_h264_ipcm
+    from ..multimodal.decode import decode_h264_ipcm
+    from ..multimodal.synth import make_h264_ipcm_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_ipcm, decode_h264_ipcm).orderBy(
+    return synth_decode(docs, make_h264_ipcm_bytes, decode_h264_ipcm).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -866,13 +877,11 @@ def multimodal_jpeg_progressive_decode(
     ``multimodal_jpeg_prog_restart_decode``.  Reference scope note: the reference delegates all
     media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_progressive,
-        synthesize_jpeg_prog,
-    )
+    from ..multimodal.decode import decode_jpeg_progressive
+    from ..multimodal.synth import make_jpeg_prog_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_prog, decode_jpeg_progressive).orderBy(
+    return synth_decode(docs, make_jpeg_prog_bytes, decode_jpeg_progressive).orderBy(
         "doc_id"
     )
 
@@ -952,13 +961,11 @@ def multimodal_jpeg_color_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_color,
-        synthesize_jpeg_color,
-    )
+    from ..multimodal.decode import decode_jpeg_color
+    from ..multimodal.synth import make_jpeg_color_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_color, decode_jpeg_color).orderBy("doc_id")
+    return synth_decode(docs, make_jpeg_color_bytes, decode_jpeg_color).orderBy("doc_id")
 
 
 @query(
@@ -1036,13 +1043,11 @@ def multimodal_jpeg_color_restart_decode(
     lands wrong sums.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_color,
-        synthesize_jpeg_cdri,
-    )
+    from ..multimodal.decode import decode_jpeg_color
+    from ..multimodal.synth import make_jpeg_cdri_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_cdri, decode_jpeg_color).orderBy("doc_id")
+    return synth_decode(docs, make_jpeg_cdri_bytes, decode_jpeg_color).orderBy("doc_id")
 
 
 @query(
@@ -1173,13 +1178,11 @@ def multimodal_h264_cavlc_decode(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import (
-        decode_h264_cavlc,
-        synthesize_h264_cavlc,
-    )
+    from ..multimodal.decode import decode_h264_cavlc
+    from ..multimodal.synth import make_h264_cavlc_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_cavlc, decode_h264_cavlc).orderBy("doc_id")
+    return synth_decode(docs, make_h264_cavlc_bytes, decode_h264_cavlc).orderBy("doc_id")
 
 
 @query(
@@ -1229,10 +1232,11 @@ def multimodal_jpeg_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: the reference delegates all media handling to its warehouse;
     this query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_jpeg_exif, synthesize_jpeg_exif
+    from ..multimodal.decode import decode_jpeg_exif
+    from ..multimodal.synth import make_jpeg_exif_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_exif, decode_jpeg_exif).orderBy("doc_id")
+    return synth_decode(docs, make_jpeg_exif_bytes, decode_jpeg_exif).orderBy("doc_id")
 
 
 @query(
@@ -1286,10 +1290,11 @@ def multimodal_aac_adts_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: the reference delegates all media handling to its warehouse;
     this query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_aac_adts, synthesize_aac_adts
+    from ..multimodal.decode import decode_aac_adts
+    from ..multimodal.synth import make_aac_adts_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_aac_adts, decode_aac_adts).orderBy("doc_id")
+    return synth_decode(docs, make_aac_adts_bytes, decode_aac_adts).orderBy("doc_id")
 
 
 @query(
@@ -1331,13 +1336,11 @@ def multimodal_mp3_id3v1_tags(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_mp3_id3v1,
-        synthesize_mp3_id3v1,
-    )
+    from ..multimodal.decode import decode_mp3_id3v1
+    from ..multimodal.synth import make_mp3_id3v1_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_id3v1, decode_mp3_id3v1).orderBy(
+    return synth_decode(docs, make_mp3_id3v1_bytes, decode_mp3_id3v1).orderBy(
         "doc_id"
     )
 
@@ -1410,10 +1413,11 @@ def multimodal_wav_g711_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_wav_g711, synthesize_wav_g711
+    from ..multimodal.decode import decode_wav_g711
+    from ..multimodal.synth import make_wav_g711_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav_g711, decode_wav_g711).orderBy("doc_id")
+    return synth_decode(docs, make_wav_g711_bytes, decode_wav_g711).orderBy("doc_id")
 
 
 @query(
@@ -1467,13 +1471,11 @@ def multimodal_gif_interlaced_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_gif_interlaced,
-        synthesize_gif_interlaced,
-    )
+    from ..multimodal.decode import decode_gif_interlaced
+    from ..multimodal.synth import make_gif_interlaced_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_interlaced, decode_gif_interlaced).orderBy("doc_id")
+    return synth_decode(docs, make_gif_interlaced_bytes, decode_gif_interlaced).orderBy("doc_id")
 
 
 @query(
@@ -1548,10 +1550,11 @@ def multimodal_heif_box_walk(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_heif, synthesize_heif
+    from ..multimodal.decode import decode_heif
+    from ..multimodal.synth import make_heif_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_heif, decode_heif).orderBy("doc_id")
+    return synth_decode(docs, make_heif_bytes, decode_heif).orderBy("doc_id")
 
 
 @query(
@@ -1633,10 +1636,11 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp4, synthesize_mp4
+    from ..multimodal.decode import decode_mp4
+    from ..multimodal.synth import make_mp4_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp4, decode_mp4).orderBy("doc_id")
+    return synth_decode(docs, make_mp4_bytes, decode_mp4).orderBy("doc_id")
 
 
 @query(
@@ -1714,10 +1718,11 @@ def multimodal_mp4_frag_flags_walk(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp4, synthesize_mp4_fflags
+    from ..multimodal.decode import decode_mp4
+    from ..multimodal.synth import make_mp4_frag_flags
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp4_fflags, decode_mp4).orderBy("doc_id")
+    return synth_decode(docs, make_mp4_frag_flags, decode_mp4).orderBy("doc_id")
 
 
 @query(
@@ -1800,10 +1805,11 @@ def multimodal_webm_ebml_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_webm, synthesize_webm
+    from ..multimodal.decode import decode_webm
+    from ..multimodal.synth import make_webm_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webm, decode_webm).orderBy("doc_id")
+    return synth_decode(docs, make_webm_bytes, decode_webm).orderBy("doc_id")
 
 
 @query(
@@ -1882,10 +1888,11 @@ def multimodal_ogg_opus_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_ogg_opus, synthesize_ogg_opus
+    from ..multimodal.decode import decode_ogg_opus
+    from ..multimodal.synth import make_ogg_opus_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_ogg_opus, decode_ogg_opus).orderBy("doc_id")
+    return synth_decode(docs, make_ogg_opus_bytes, decode_ogg_opus).orderBy("doc_id")
 
 
 @query(
@@ -2047,10 +2054,11 @@ def multimodal_mp3_maindata_decode(spark: SparkSession, sf_dir: str) -> DataFram
     pure short-block granules decode in
     ``multimodal_mp3_short_block_decode`` and the widened-table +
     count1-table-A dispatch in ``multimodal_mp3_hufftables_decode``."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_md
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_md_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_md, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_md_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -2168,10 +2176,11 @@ def multimodal_mp3_short_block_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_sb
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_sb_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_sb, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_sb_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -2301,10 +2310,11 @@ def multimodal_mp3_hufftables_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ht
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_ht_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ht, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_ht_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -2428,9 +2438,9 @@ def multimodal_mp3_linbits_decode(
 ) -> DataFrame:
     """MP3 main-data decode through the COMPLETE 16x16 B.7 Huffman
     tier: granule regions cycle all 18 ids — tables 13 (validated
-    round 14, tools/mp3_t13_round14.py) and 15 plus ALL SIXTEEN
+    round 14, tools/mp3_t13_round14.py in git history) and 15 plus ALL SIXTEEN
     linbits escape tables 16-31 (validated round 13 via the
-    edge/row-tiling solves — tools/mp3_table_workbench.py; ids 17-23
+    edge/row-tiling solves — tools/mp3_table_workbench.py in git history; ids 17-23
     share table 16's code matrix and 25-31 share table 24's,
     differing only in MP3_LINBITS width).  A coordinate
     decoded as the ESC value 15 is extended by the table's raw
@@ -2445,10 +2455,11 @@ def multimodal_mp3_linbits_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_lb
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_lb_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_lb, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_lb_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -2528,13 +2539,11 @@ def multimodal_h264_multiref_decode(
     declared boundaries.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_multiref,
-        synthesize_h264_multiref,
-    )
+    from ..multimodal.decode import decode_h264_multiref
+    from ..multimodal.synth import make_h264_multiref_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_multiref, decode_h264_multiref).orderBy(
+    return synth_decode(docs, make_h264_multiref_bytes, decode_h264_multiref).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -2596,13 +2605,11 @@ def multimodal_jpeg_prog_restart_decode(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_progressive,
-        synthesize_jpeg_prog_rst,
-    )
+    from ..multimodal.decode import decode_jpeg_progressive
+    from ..multimodal.synth import make_jpeg_prog_rst_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_prog_rst, decode_jpeg_progressive).orderBy(
+    return synth_decode(docs, make_jpeg_prog_rst_bytes, decode_jpeg_progressive).orderBy(
         "doc_id"
     )
 
@@ -2714,13 +2721,11 @@ def multimodal_h264_p8x8_decode(
     boundaries.  Reference scope note: the reference delegates all
     media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_p8x8,
-        synthesize_h264_p8x8,
-    )
+    from ..multimodal.decode import decode_h264_p8x8
+    from ..multimodal.synth import make_h264_p8x8_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_p8x8, decode_h264_p8x8).orderBy(
+    return synth_decode(docs, make_h264_p8x8_bytes, decode_h264_p8x8).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -2815,13 +2820,11 @@ def multimodal_h264_tdirect_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_tdirect,
-        synthesize_h264_tdirect,
-    )
+    from ..multimodal.decode import decode_h264_tdirect
+    from ..multimodal.synth import make_h264_tdirect_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_tdirect, decode_h264_tdirect).orderBy(
+    return synth_decode(docs, make_h264_tdirect_bytes, decode_h264_tdirect).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3011,13 +3014,11 @@ def multimodal_h264_fracpel_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_fracpel,
-        synthesize_h264_fracpel,
-    )
+    from ..multimodal.decode import decode_h264_fracpel
+    from ..multimodal.synth import make_h264_fracpel_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_fracpel, decode_h264_fracpel).orderBy(
+    return synth_decode(docs, make_h264_fracpel_bytes, decode_h264_fracpel).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3186,13 +3187,11 @@ def multimodal_h264_bpixel_decode(
     pixels by multimodal_h264_wpixel_decode.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_bpixel,
-        synthesize_h264_bpixel,
-    )
+    from ..multimodal.decode import decode_h264_bpixel
+    from ..multimodal.synth import make_h264_bpixel_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_bpixel, decode_h264_bpixel).orderBy(
+    return synth_decode(docs, make_h264_bpixel_bytes, decode_h264_bpixel).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3352,13 +3351,11 @@ def multimodal_h264_dpixel_decode(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import (
-        decode_h264_dpixel,
-        synthesize_h264_dpixel,
-    )
+    from ..multimodal.decode import decode_h264_dpixel
+    from ..multimodal.synth import make_h264_dpixel_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_dpixel, decode_h264_dpixel).orderBy(
+    return synth_decode(docs, make_h264_dpixel_bytes, decode_h264_dpixel).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3522,13 +3519,11 @@ def multimodal_h264_wpixel_decode(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_wpixel,
-        synthesize_h264_wpixel,
-    )
+    from ..multimodal.decode import decode_h264_wpixel
+    from ..multimodal.synth import make_h264_wpixel_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_wpixel, decode_h264_wpixel).orderBy(
+    return synth_decode(docs, make_h264_wpixel_bytes, decode_h264_wpixel).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3699,13 +3694,11 @@ def multimodal_h264_chroma_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_chroma,
-        synthesize_h264_chroma,
-    )
+    from ..multimodal.decode import decode_h264_chroma
+    from ..multimodal.synth import make_h264_chroma_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_chroma, decode_h264_chroma).orderBy(
+    return synth_decode(docs, make_h264_chroma_bytes, decode_h264_chroma).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -3864,13 +3857,11 @@ def multimodal_h264_submb_decode(
     sub-partitions.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_submb,
-        synthesize_h264_submb,
-    )
+    from ..multimodal.decode import decode_h264_submb
+    from ..multimodal.synth import make_h264_submb_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_submb, decode_h264_submb).orderBy(
+    return synth_decode(docs, make_h264_submb_bytes, decode_h264_submb).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -4008,10 +3999,11 @@ def multimodal_mp3_requant_exact(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rq
+    from ..multimodal.decode import decode_mp3_requant
+    from ..multimodal.synth import make_mp3_rq_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rq, decode_mp3_requant).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_rq_bytes, decode_mp3_requant).orderBy("doc_id")
 
 
 @query(
@@ -4147,10 +4139,11 @@ def multimodal_mp3_requant_wide(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqw
+    from ..multimodal.decode import decode_mp3_requant
+    from ..multimodal.synth import make_mp3_rqw_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqw, decode_mp3_requant).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_rqw_bytes, decode_mp3_requant).orderBy("doc_id")
 
 
 @query(
@@ -4287,10 +4280,11 @@ def multimodal_mp3_requant_escape(
     overflow int64).  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqe
+    from ..multimodal.decode import decode_mp3_requant
+    from ..multimodal.synth import make_mp3_rqe_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqe, decode_mp3_requant).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_rqe_bytes, decode_mp3_requant).orderBy("doc_id")
 
 
 @query(
@@ -4337,10 +4331,11 @@ def multimodal_mp3_id3_tags(
     declared boundaries.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_id3, synthesize_mp3_id3
+    from ..multimodal.decode import decode_mp3_id3
+    from ..multimodal.synth import make_mp3_id3_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_id3, decode_mp3_id3).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_id3_bytes, decode_mp3_id3).orderBy("doc_id")
 
 
 @query(
@@ -4420,10 +4415,11 @@ def multimodal_webp_vp8l_decode(
     Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_webp, synthesize_webp
+    from ..multimodal.decode import decode_webp
+    from ..multimodal.synth import make_webp_vp8l_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webp, decode_webp).orderBy("doc_id")
+    return synth_decode(docs, make_webp_vp8l_bytes, decode_webp).orderBy("doc_id")
 
 
 @query(
@@ -4515,10 +4511,11 @@ def multimodal_webp_vp8l_transform_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_webp, synthesize_webp_transform
+    from ..multimodal.decode import decode_webp
+    from ..multimodal.synth import make_webp_vp8l_transform_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webp_transform, decode_webp).orderBy("doc_id")
+    return synth_decode(docs, make_webp_vp8l_transform_bytes, decode_webp).orderBy("doc_id")
 
 
 @query(
@@ -4620,13 +4617,11 @@ def multimodal_h264_weighted_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_weighted,
-        synthesize_h264_weighted,
-    )
+    from ..multimodal.decode import decode_h264_weighted
+    from ..multimodal.synth import make_h264_weighted_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_weighted, decode_h264_weighted).orderBy("doc_id", "frame_idx")
+    return synth_decode(docs, make_h264_weighted_bytes, decode_h264_weighted).orderBy("doc_id", "frame_idx")
 
 
 @query(
@@ -4707,13 +4702,11 @@ def multimodal_h264_bframe_decode(
     lists, weighted prediction.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_bframe,
-        synthesize_h264_bframe,
-    )
+    from ..multimodal.decode import decode_h264_bframe
+    from ..multimodal.synth import make_h264_bframe_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_bframe, decode_h264_bframe).orderBy(
+    return synth_decode(docs, make_h264_bframe_bytes, decode_h264_bframe).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -4778,10 +4771,11 @@ def multimodal_png_colortypes_decode(
     sibling decoders.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_png_ct, synthesize_png_ct
+    from ..multimodal.decode import decode_png_ct
+    from ..multimodal.synth import make_png_ct_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_ct, decode_png_ct).orderBy("doc_id")
+    return synth_decode(docs, make_png_ct_bytes, decode_png_ct).orderBy("doc_id")
 
 
 @query(
@@ -4919,10 +4913,11 @@ def multimodal_mp3_requant_ms_stereo(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant_ms, synthesize_mp3_ms
+    from ..multimodal.decode import decode_mp3_requant_ms
+    from ..multimodal.synth import make_mp3_ms_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ms, decode_mp3_requant_ms).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_ms_bytes, decode_mp3_requant_ms).orderBy("doc_id")
 
 
 @query(
@@ -5070,13 +5065,11 @@ def multimodal_mp3_requant_is_stereo(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_mp3_requant_is,
-        synthesize_mp3_is,
-    )
+    from ..multimodal.decode import decode_mp3_requant_is
+    from ..multimodal.synth import make_mp3_is_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_is, decode_mp3_requant_is).orderBy(
+    return synth_decode(docs, make_mp3_is_bytes, decode_mp3_requant_is).orderBy(
         "doc_id"
     )
 
@@ -5201,10 +5194,11 @@ def multimodal_mp3_requant_short(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqs
+    from ..multimodal.decode import decode_mp3_requant
+    from ..multimodal.synth import make_mp3_rqs_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqs, decode_mp3_requant).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_rqs_bytes, decode_mp3_requant).orderBy("doc_id")
 
 
 @query(
@@ -5419,10 +5413,11 @@ def multimodal_mp3_imdct_synth(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_mp3_imdct, synthesize_mp3_imdct
+    from ..multimodal.decode import decode_mp3_imdct
+    from ..multimodal.synth import make_mp3_imdct_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_imdct, decode_mp3_imdct).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_imdct_bytes, decode_mp3_imdct).orderBy("doc_id")
 
 
 @query(
@@ -5544,10 +5539,11 @@ def multimodal_mp3_wswitch_regions_decode(
     (b[8] agrees across every MPEG-1 B.8 row).  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ws
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_ws_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ws, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_ws_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -5670,10 +5666,11 @@ def multimodal_mp3_b8_regions_decode(
     576) and by this round-trip.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_b8
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_b8_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_b8, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_b8_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -5791,10 +5788,11 @@ def multimodal_mp3_mixed_block_decode(
     pairs).  Reference scope note: the reference delegates all media
     handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_mx
+    from ..multimodal.decode import decode_mp3_maindata
+    from ..multimodal.synth import make_mp3_mx_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_mx, decode_mp3_maindata).orderBy("doc_id")
+    return synth_decode(docs, make_mp3_mx_bytes, decode_mp3_maindata).orderBy("doc_id")
 
 
 @query(
@@ -5868,10 +5866,11 @@ def multimodal_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     picture size.  Non-PCM coded macroblocks (real CAVLC residuals),
     CABAC, and ref-list modification raise at the declared stubs
     (``decode.py:_parse_pskip_slice``)."""
-    from ..multimodal.decode import decode_h264_gop, synthesize_h264_gop
+    from ..multimodal.decode import decode_h264_gop
+    from ..multimodal.synth import make_h264_gop_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_gop, decode_h264_gop).orderBy(
+    return synth_decode(docs, make_h264_gop_bytes, decode_h264_gop).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -5928,10 +5927,11 @@ def multimodal_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips, or mis-strides a pass fails even if the global mean
     survives.  Completes the PNG surface next to the non-interlaced
     ``multimodal_png_decode``."""
-    from ..multimodal.decode import decode_png_adam7, synthesize_png_adam7
+    from ..multimodal.decode import decode_png_adam7
+    from ..multimodal.synth import make_png_adam7_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_adam7, decode_png_adam7).orderBy("doc_id")
+    return synth_decode(docs, make_png_adam7_bytes, decode_png_adam7).orderBy("doc_id")
 
 
 @query(
@@ -6009,10 +6009,11 @@ def multimodal_gif_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore-to-previous), transparency, Adam-style interlaced frames,
     and per-frame local color tables — exercised by the sibling
     ``multimodal_gif_{disposal,lct}_decode`` fixtures."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_anim
+    from ..multimodal.decode import decode_gif_anim
+    from ..multimodal.synth import make_gif_anim_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_anim, decode_gif_anim).orderBy(
+    return synth_decode(docs, make_gif_anim_bytes, decode_gif_anim).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -6088,10 +6089,11 @@ def multimodal_gif_disposal_decode(spark: SparkSession, sf_dir: str) -> DataFram
     dispose-save-draw cycle; a decoder that skips the save, fills the
     wrong rect, or draws transparent pixels diverges immediately
     (``decode.py:decode_gif_anim``)."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_disposal
+    from ..multimodal.decode import decode_gif_anim
+    from ..multimodal.synth import make_gif_disposal_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_disposal, decode_gif_anim).orderBy(
+    return synth_decode(docs, make_gif_disposal_bytes, decode_gif_anim).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -6143,10 +6145,11 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory (PNG static + Adam7, JPEG, GIF static + animated, BMP)
     with the archival/scanner format; other compressions, predictors,
     and tiled TIFFs raise at the declared boundary."""
-    from ..multimodal.decode import decode_tiff_real, synthesize_tiff
+    from ..multimodal.decode import decode_tiff_real
+    from ..multimodal.synth import make_tiff_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_tiff, decode_tiff_real).orderBy("doc_id")
+    return synth_decode(docs, make_tiff_bytes, decode_tiff_real).orderBy("doc_id")
 
 
 @query(
@@ -6205,10 +6208,11 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lossless-codec format; stereo decorrelation lives in
     ``multimodal_flac_stereo_decode`` and variable blocking + wasted
     bits in ``multimodal_flac_vbs_decode``."""
-    from ..multimodal.decode import decode_flac_real, synthesize_flac
+    from ..multimodal.decode import decode_flac_real
+    from ..multimodal.synth import make_flac_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac, decode_flac_real).orderBy("doc_id")
+    return synth_decode(docs, make_flac_bytes, decode_flac_real).orderBy("doc_id")
 
 
 @query(
@@ -6273,10 +6277,11 @@ def multimodal_flac_vbs_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates all media handling to
     its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_flac_real, synthesize_flac_vbs
+    from ..multimodal.decode import decode_flac_real
+    from ..multimodal.synth import make_flac_vbs_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac_vbs, decode_flac_real).orderBy("doc_id")
+    return synth_decode(docs, make_flac_vbs_bytes, decode_flac_real).orderBy("doc_id")
 
 
 @query(
@@ -6338,10 +6343,11 @@ def multimodal_gif_lct_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (``decode.py:decode_gif_anim``).  Completes the GIF89a
     frame-lifecycle inventory: composition, disposal, transparency,
     interlace, and now per-frame palettes."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_lct
+    from ..multimodal.decode import decode_gif_anim
+    from ..multimodal.synth import make_gif_lct_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_lct, decode_gif_anim).orderBy(
+    return synth_decode(docs, make_gif_lct_bytes, decode_gif_anim).orderBy(
         "doc_id", "frame_idx"
     )
 
@@ -6391,10 +6397,11 @@ def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     sum (``decode.py:decode_png_palette``).  Completes the PNG family
     beside truecolor (``multimodal_png_decode``) and Adam7
     (``multimodal_png_adam7_decode``)."""
-    from ..multimodal.decode import decode_png_palette, synthesize_png_palette
+    from ..multimodal.decode import decode_png_palette
+    from ..multimodal.synth import make_png_palette_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_palette, decode_png_palette).orderBy("doc_id")
+    return synth_decode(docs, make_png_palette_bytes, decode_png_palette).orderBy("doc_id")
 
 
 @query(
@@ -6428,10 +6435,11 @@ def multimodal_wav_extended_decode(spark: SparkSession, sf_dir: str) -> DataFram
     bit-identical across formats (``decode.py:decode_wav_ext``).
     Completes the WAV family beside the stdlib-path
     ``multimodal_wav_decode``."""
-    from ..multimodal.decode import decode_wav_ext, synthesize_wav_ext
+    from ..multimodal.decode import decode_wav_ext
+    from ..multimodal.synth import make_wav_ext_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav_ext, decode_wav_ext).orderBy("doc_id")
+    return synth_decode(docs, make_wav_ext_bytes, decode_wav_ext).orderBy("doc_id")
 
 
 @query(
@@ -6483,10 +6491,11 @@ def multimodal_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     recomputed against STREAMINFO's claim.  Removes the mono
     restriction that was the FLAC family's last major boundary
     (``decode.py:decode_flac_stereo``)."""
-    from ..multimodal.decode import decode_flac_stereo, synthesize_flac_stereo
+    from ..multimodal.decode import decode_flac_stereo
+    from ..multimodal.synth import make_flac_stereo_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac_stereo, decode_flac_stereo).orderBy("doc_id")
+    return synth_decode(docs, make_flac_stereo_bytes, decode_flac_stereo).orderBy("doc_id")
 
 
 @query(
@@ -6543,10 +6552,11 @@ def multimodal_bmp_rle8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (skipped pixels settle to palette index 0, tested with a custom
     delta-bearing stream); this fixture itself never emits one, so
     the oracle is unchanged."""
-    from ..multimodal.decode import decode_bmp_rle8, synthesize_bmp_rle8
+    from ..multimodal.decode import decode_bmp_rle8
+    from ..multimodal.synth import make_bmp_rle8_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_bmp_rle8, decode_bmp_rle8).orderBy("doc_id")
+    return synth_decode(docs, make_bmp_rle8_bytes, decode_bmp_rle8).orderBy("doc_id")
 
 
 @query(
@@ -6614,10 +6624,11 @@ def multimodal_bmp_rle4_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared 4-entry palette.  Reference scope note: the
     reference delegates media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_bmp_rle4, synthesize_bmp_rle4
+    from ..multimodal.decode import decode_bmp_rle4
+    from ..multimodal.synth import make_bmp_rle4_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_bmp_rle4, decode_bmp_rle4).orderBy("doc_id")
+    return synth_decode(docs, make_bmp_rle4_bytes, decode_bmp_rle4).orderBy("doc_id")
 
 
 @query(
@@ -6704,9 +6715,10 @@ def multimodal_h264_inter_decode(
     residuals raise at declared boundaries.  Reference scope note:
     the reference delegates media handling to its warehouse; this is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_h264_inter, synthesize_h264_inter
+    from ..multimodal.decode import decode_h264_inter
+    from ..multimodal.synth import make_h264_inter_bytes
 
     docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_inter, decode_h264_inter).orderBy(
+    return synth_decode(docs, make_h264_inter_bytes, decode_h264_inter).orderBy(
         "doc_id", "frame_idx"
     )

@@ -1,8 +1,8 @@
 """Multimodal plumbing tests: media struct schema, decode kernels, the
-real-codec stub contract, and UDF-surface registration.
+declared codec boundaries, and UDF-surface registration.
 
 Oracle parity for the registered queries runs in test_oracle_parity; these
-cover the library API and the parts parity can't see (the stubbed path).
+cover the library API and the parts parity can't see (rejections).
 """
 
 from __future__ import annotations
@@ -34,20 +34,6 @@ def test_media_struct_shape(media):
     assert row.n_bytes == len(row.payload)
 
 
-def test_real_codec_path_is_stubbed(media):
-    """The real decode site must raise NotImplementedError (no codec libs
-    in this container) — and raise it from inside the distributed kernel,
-    proving the plumbing reaches the codec call."""
-    df = decode_image_meta(media.limit(1), codec="real")
-    with pytest.raises(Exception, match="NotImplementedError|image library"):
-        df.collect()
-
-
-def test_unknown_codec_rejected(media):
-    with pytest.raises(ValueError, match="unknown codec"):
-        decode_image_meta(media, codec="webp")
-
-
 def test_frame_sampling_counts(media, spark):
     """Row expansion: each doc yields floor(bytes/100) frames sampled at
     stride 10 → ceil(n_frames/10) rows."""
@@ -74,12 +60,6 @@ def test_audio_chunk_energy_matches_bytes(media):
         assert r.n_samples == 400
         assert r.energy == sum(chunk)
         assert r.peak == max(chunk)
-
-
-def test_audio_real_codec_is_stubbed(media):
-    df = audio_chunk_energy(media.limit(1), codec="real")
-    with pytest.raises(Exception, match="NotImplementedError|audio library"):
-        df.collect()
 
 
 def test_block_mean_resize_matches_bytes(media):
@@ -152,14 +132,12 @@ def test_bmp_synth_is_spec_compliant():
 def test_wav_decode_roundtrip(spark):
     """Kernel-level roundtrip on a tiny frame: decode(synthesize(ids))
     returns the generation parameters by actually parsing the bytes."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_wav_real,
-        synthesize_wav,
-    )
-    from open_source_etl_spark.multimodal.synth import wav_params
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_wav_real
+    from open_source_etl_spark.multimodal.synth import make_wav_bytes, wav_params
 
     ids = spark.createDataFrame([(i,) for i in (0, 3, 99)], "doc_id long")
-    rows = {r.doc_id: r for r in decode_wav_real(synthesize_wav(ids)).collect()}
+    rows = {r.doc_id: r for r in decode_wav_real(synthesize(ids, make_wav_bytes)).collect()}
     for i in (0, 3, 99):
         fr, nf, amp = wav_params(i)
         r = rows[i]
@@ -752,16 +730,14 @@ def test_avi_mjpeg_decode_frames(spark):
     """Every frame of every synthesized AVI decodes to the closed-form
     geometry and mean; frame means differ across frames (the per-frame
     base walk), so a decoder that replays frame 0 fails."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_avi_mjpeg,
-        synthesize_avi,
-    )
-    from open_source_etl_spark.multimodal.synth import avi_params
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_avi_mjpeg
+    from open_source_etl_spark.multimodal.synth import avi_params, make_avi_bytes
 
     docs = spark.createDataFrame(
         [(d,) for d in (0, 3, 7, 11, 42)], "doc_id long"
     )
-    rows = decode_avi_mjpeg(synthesize_avi(docs)).collect()
+    rows = decode_avi_mjpeg(synthesize(docs, make_avi_bytes)).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -1215,17 +1191,16 @@ def test_h264_ipcm_decode_frames(spark):
     """Every frame of every all-I_PCM stream decodes to the closed-form
     dimensions and mean luma; means differ across frames (the per-frame
     base walk), so a decoder replaying frame 0 fails."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_h264_ipcm,
-        synthesize_h264_ipcm,
-    )
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_h264_ipcm
     from open_source_etl_spark.multimodal.synth import (
         h264_ipcm_luma,
         h264_ipcm_params,
+        make_h264_ipcm_bytes,
     )
 
     docs = spark.createDataFrame([(d,) for d in (0, 3, 7, 11, 42)], "doc_id long")
-    rows = decode_h264_ipcm(synthesize_h264_ipcm(docs)).collect()
+    rows = decode_h264_ipcm(synthesize(docs, make_h264_ipcm_bytes)).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -1327,16 +1302,14 @@ def test_mp3_maindata_decode_uses_reservoir(spark):
     with a nonzero reservoir step the decoded max_reservoir must be
     positive and equal (n_frames-1)*delta, proving the decoder seeks
     backwards across physical frame boundaries."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_mp3_maindata,
-        synthesize_mp3_md,
-    )
-    from open_source_etl_spark.multimodal.synth import mp3_md_params
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
+    from open_source_etl_spark.multimodal.synth import make_mp3_md_bytes, mp3_md_params
 
     docs = spark.createDataFrame([(11,), (12,)], "doc_id long")
     rows = {
         r.doc_id: r
-        for r in decode_mp3_maindata(synthesize_mp3_md(docs)).collect()
+        for r in decode_mp3_maindata(synthesize(docs, make_mp3_md_bytes)).collect()
     }
     for d in (11, 12):
         n_frames, _sr, _br, delta = mp3_md_params(d)
@@ -1860,9 +1833,9 @@ def test_mp3_huffman_tables_are_valid_complete_codes():
     decides which clean-room transcriptions ship at all — tables 8-12
     cleared it in round 11 via the hole-tiling reconstruction, the
     16x16 tables 15/16/24 cleared it in round 13 via the scaled-up
-    edge-tiling solves (documented in tools/mp3_table_workbench.py),
+    edge-tiling solves (documented in tools/mp3_table_workbench.py in git history),
     and table 13 — the last gap — cleared it in round 14 when a fresh
-    full-table sitting passed verbatim (tools/mp3_t13_round14.py);
+    full-table sitting passed verbatim (tools/mp3_t13_round14.py in git history);
     EVERY B.7 table now ships (16-23 share table 16's codes, 25-31
     share table 24's — MP3_LINBITS)."""
     from fractions import Fraction
@@ -2788,13 +2761,12 @@ def test_gif_disposal_semantics_pinned(spark):
     rect, so frame 2's transparent pixels must show the DISPOSED state
     (bg for doc 3: dis(1) = 2 + (3+1) % 2 = 2), not frame 1's pixels —
     and the opaque pixels must be frame 2's own values."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_gif_anim,
-        synthesize_gif_disposal,
-    )
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_gif_anim
     from open_source_etl_spark.multimodal.synth import (
         gif_disposal_params,
         gif_palette,
+        make_gif_disposal_bytes,
     )
 
     doc = 3
@@ -2802,7 +2774,7 @@ def test_gif_disposal_semantics_pinned(spark):
     docs = spark.createDataFrame([(doc,)], "doc_id long")
     rows = {
         r.frame_idx: r
-        for r in decode_gif_anim(synthesize_gif_disposal(docs)).collect()
+        for r in decode_gif_anim(synthesize(docs, make_gif_disposal_bytes)).collect()
     }
     assert len(rows) == nf
     pal = gif_palette(doc)
@@ -3187,10 +3159,8 @@ def test_gif_interlaced_base_frame_really_interlaced(spark):
     image descriptor flag is set, the LZW payload's row order differs
     from sequential, and the decoder still reconstructs the sequential
     canvas (frame 0 mean matches the closed form)."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_gif_anim,
-        synthesize_gif_disposal,
-    )
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.multimodal.decode import decode_gif_anim
     from open_source_etl_spark.multimodal.synth import (
         gif_disposal_params,
         gif_palette,
@@ -3209,7 +3179,7 @@ def test_gif_interlaced_base_frame_really_interlaced(spark):
     ) // (w * h)
     docs = spark.createDataFrame([(doc,)], "doc_id long")
     row = (
-        decode_gif_anim(synthesize_gif_disposal(docs))
+        decode_gif_anim(synthesize(docs, make_gif_disposal_bytes))
         .orderBy("frame_idx")
         .first()
     )

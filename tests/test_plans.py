@@ -80,28 +80,34 @@ def test_python_stages_only_where_designed(audit):
     assert audit("multimodal_image_meta").python_stages >= 1
 
 
-@pytest.mark.parametrize("name", [
-    "multimodal_h264_fracpel_decode",
-    "multimodal_h264_submb_decode",
-    "multimodal_h264_chroma_decode",
-    "multimodal_h264_bpixel_decode",
-    "multimodal_h264_wpixel_decode",
-    "multimodal_h264_dpixel_decode",
-    "multimodal_mp3_requant_escape",
-    "multimodal_jpeg_color_restart_decode",
-    "multimodal_mp4_frag_flags_walk",
-])
+def _make_walk_queries() -> list[str]:
+    """Every registered query built on the make→walk composition."""
+    import inspect
+
+    return sorted(
+        name for name, fn in QUERIES.items()
+        if "synth_decode(" in inspect.getsource(fn)
+    )
+
+
+MAKE_WALK_QUERIES = _make_walk_queries()
+
+
+def test_make_walk_queries_are_discovered():
+    assert len(MAKE_WALK_QUERIES) >= 60, MAKE_WALK_QUERIES
+    assert "multimodal_wav_features" in MAKE_WALK_QUERIES
+
+
+@pytest.mark.parametrize("name", MAKE_WALK_QUERIES)
 def test_round14_media_queries_keep_the_arrow_tier_shape(audit, name):
-    """Every round-14 media/container query keeps the established
-    scale shape: ONE fused Python stage (the optimization round's
-    ``fuse_synth_decode`` composes the synthesize and decode Arrow
-    kernels inside a single mapInPandas, so payload bytes never
-    cross the JVM boundary), no data shuffle beyond the fixed synth
-    repartition + final orderBy (PLANS shuffles <= 2), one scan
-    column (doc_id), and no broadcast joins — per-row kernels with
-    no cross-row state cannot regress into shuffling pipelines (or
-    back into the two-stage payload round-trip) without tripping
-    this pin."""
+    """Every synthesize→decode media query keeps the established scale
+    shape: ONE Python stage (``synth_decode`` builds and walks each
+    payload inside a single mapInPandas, so payload bytes never cross
+    the JVM boundary), no data shuffle beyond the fixed synth
+    repartition + final orderBy (PLANS shuffles <= 2), one scan column
+    (doc_id), and no broadcast joins — per-row kernels with no
+    cross-row state cannot regress into shuffling pipelines (or back
+    into a two-stage payload round-trip) without tripping this pin."""
     facts = audit(name)
     assert facts.python_stages == 1, (name, facts.python_stages)
     assert facts.exchanges <= 2, (name, facts.exchanges)

@@ -87,15 +87,14 @@ def test_warc_rejects_malformed():
 def test_warc_extract_distributed(spark):
     """The mapInPandas path produces one row per doc with the same
     values as the pure parse."""
-    from open_source_etl_spark.ingest.warc import (
-        extract_warc_records,
-        synthesize_warc,
-    )
+    from open_source_etl_spark.functions.per_doc import synthesize
+    from open_source_etl_spark.ingest.warc import extract_warc_records
 
     docs = spark.createDataFrame(
         [(i, "word " * (10 + i)) for i in range(6)], "doc_id long, text string"
     )
-    rows = {r.doc_id: r for r in extract_warc_records(synthesize_warc(docs)).collect()}
+    payloads = synthesize(docs, make_warc_bytes, "text")
+    rows = {r.doc_id: r for r in extract_warc_records(payloads).collect()}
     for i in range(6):
         exp = parse_warc(i, make_warc_bytes(i, "word " * (10 + i)))[:4]
         got = (rows[i].n_records, rows[i].n_responses, rows[i].n_ok,
